@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.{CpuFloor, SizeDispatch}
+
 /** Generalized linear models over groups — the reference's actual
   * regression stack, Spark-first.
   *
@@ -208,54 +210,14 @@ object Glm {
         (0 until p).map(i => (s"__b_$i", r6s(s"__b_$i"))))
   }
 
-  /** Parallelism floor for the persisted IRLS working set (guide §2.5,
-    * unsplittable input): the gate corpora are single-row-group parquet
-    * files, so the scan — and with it every cached partition and every
-    * per-iteration moment aggregation's map side — is ONE task however
-    * many cores the session has (measured: a 5-predictor moment pass over
-    * the 100k-row cached working set takes 0.83 s single-partition vs
-    * 0.40 s at 32 — the decimal Gram sums are CPU-dense). One round-robin
-    * shuffle at materialization buys map-side parallelism for all K
-    * passes. Scale-adaptive, not a local constant: when the scan already
-    * carries >= the floor's target partitions (any real multi-file/
-    * multi-row-group table) this is a no-op — no added exchange. Results
-    * are partitioning-independent by construction (the quantized DECIMAL
-    * moment sums exist precisely so row order cannot perturb them).
-    *
-    * The floor target scales with the per-pass decimal width `heavySums`
-    * (the number of quantized decimal aggregates per pass): wide fits
-    * (≥14 — p ≥ 4 IRLS Gram at p(p+3)/2, or mi-logit with ≥ 3 draws at
-    * 5/draw) floor to defaultParallelism; narrow p=2 fits (5 sums/pass)
-    * floor to min(8, defaultParallelism) — at p=2 the full-width floor
-    * measurably LOST time on the gate corpus (huber 1.9 s → 4.0 s at 32
-    * tasks/pass: 32-way task scheduling × K passes exceeds the decimal
-    * win), while a few-way split still buys map-side parallelism for the
-    * CPU-dense sums at a fraction of the scheduling cost (round 16,
-    * VERDICT r15 #3 middle ground).
-    *
-    * `probe` must be an EXCHANGE-FREE frame (scan + narrow ops) that
-    * shares the working set's scan: probing `df` itself when it carries a
-    * broadcast join (the mi-logit imputation-stats join) finalizes the
-    * adaptive plan and EXECUTES the join's build side — a duplicated
-    * stats pass per fit (ADVICE r15). A narrow probe's RDD is built
-    * without running any job, and a broadcast join does not change the
-    * streamed side's partitioning, so the narrow count is the right one.
-    */
-  private def parallelFloor(df: DataFrame, heavySums: Int,
-                            probe: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val target = if (heavySums >= 14) cores else math.min(8, cores)
-    if (probe.rdd.getNumPartitions < target) df.repartition(target)
-    else df
-  }
-
   /** Portable half-up 6dp rounding — scalar twin of [[r6s]]. */
   private def r6(v: Double): Double = math.floor(v * 1.0e6 + 0.5) / 1.0e6
 
   /** Scalar twin of [[r9s]] — the 9dp rounding that quenches EXP ulp
-    * drift. (FLOOR's BIGINT round-trip is exact here: the argument is
-    * ≤ ~1e9, inside the 2^53 integer-exact range.) */
-  private def r9d(v: Double): Double = math.floor(v * 1.0e9 + 0.5) / 1.0e9
+    * drift. The Long round-trip is FLOOR's BIGINT, as in [[q9l]]: NaN maps
+    * to 0 like the SQL twin, and finite values are unchanged (the
+    * argument is ≤ ~1e9, inside the 2^53 integer-exact range). */
+  private def r9d(v: Double): Double = math.floor(v * 1.0e9 + 0.5).toLong / 1.0e9
 
   /** Quantizers matching [[qsum]]/[[qsum9]]'s per-term FLOOR(t·grid + 0.5):
     * SQL FLOOR(double) is a BIGINT via the JVM double→long cast (clamping
@@ -361,7 +323,7 @@ object Glm {
     */
   def logitByGroup(rows0: DataFrame, group: String, xs: Seq[Column], y: Column,
                    outNames: Seq[String], iters: Int = 6, ridge: Double = 1e-6,
-                   localRowCap: Int = 1 << 20): DataFrame =
+                   localRowCap: Int = SizeDispatch.DefaultCap): DataFrame =
     irlsFitByGroup(rows0, group, xs, y, outNames, iters, ridge, None, localRowCap)
 
   /** Huber robust regression per group — OLS whose influence function
@@ -379,7 +341,7 @@ object Glm {
   def huberByGroup(rows0: DataFrame, group: String, xs: Seq[Column], y: Column,
                    outNames: Seq[String], delta: Double,
                    iters: Int = 6, ridge: Double = 1e-6,
-                   localRowCap: Int = 1 << 20): DataFrame = {
+                   localRowCap: Int = SizeDispatch.DefaultCap): DataFrame = {
     require(delta > 0.0, s"huberByGroup needs delta > 0, got $delta")
     irlsFitByGroup(rows0, group, xs, y, outNames, iters, ridge,
       Some(delta), localRowCap)
@@ -404,25 +366,18 @@ object Glm {
         xs.zipWithIndex.map { case (c, i) => c.cast("double").as(s"__x${i + 1}") } :+
         y.cast("double").as("__y"): _*)
       .filter(expr(completeCase(p)))
-    // Size dispatch (round 16, the connectedComponents discipline): a
-    // complete-case working set that fits on the driver is fit there in
-    // ONE bounded limit(cap+1).collect() job — all K moment passes become
-    // driver arithmetic over the collected rows (localIrlsFit replays the
-    // moment fragments bit-for-bit), replacing K aggregation jobs + a
-    // persist + K−1 broadcast beta joins. Past the cap, the loop below
-    // runs unchanged. A null group falls through to the loop: the
-    // distributed beta join drops a null group after iteration 1 (null
-    // never equi-joins), and the loop is the one source of truth for that
-    // corner. Driver state is cap-bounded: ~(p+2)-column rows, never the
-    // corpus — at the default 2^20 cap and p=6 that is realistically a few
-    // hundred MB of boxed rows, transient.
-    if (localRowCap > 0) {
-      val sample = working.limit(localRowCap + 1).collect()
-      if (sample.length <= localRowCap && !sample.exists(_.isNullAt(0)))
-        return localIrlsFit(sample, p, iters, ridge, huberDelta,
-          working.schema(group), outNames, rows0.sparkSession)
-    }
-    val prepared = parallelFloor(working, p * (p + 3) / 2, working)
+    // Size dispatch: a complete-case working set under the cap is fit on
+    // the driver — all K moment passes become driver arithmetic over the
+    // collected rows (localIrlsFit replays the moment fragments bit-for-
+    // bit), replacing K aggregation jobs + a persist + K−1 broadcast beta
+    // joins. A null group falls through to the loop: the distributed beta
+    // join drops a null group after iteration 1 (null never equi-joins),
+    // and the loop is the one source of truth for that corner.
+    val small = SizeDispatch.collectIfSmall(working, localRowCap, !_.isNullAt(0))
+    if (small.isDefined)
+      return localIrlsFit(small.get, p, iters, ridge, huberDelta,
+        working.schema(group), outNames, rows0.sparkSession)
+    val prepared = CpuFloor(working, working, p * (p + 3) / 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spark = rows0.sparkSession
     val groupField = prepared.schema(group)
@@ -934,7 +889,7 @@ object Glm {
   def miLogitPooledByGroup(df: DataFrame, group: String, id: Column, x: Column, y: Column,
                            draws: Int, firstOffset: Int = 2, spread: Double = 1.0,
                            iters: Int = 6, ridge: Double = 1e-6,
-                           localRowCap: Int = 1 << 20): DataFrame = {
+                           localRowCap: Int = SizeDispatch.DefaultCap): DataFrame = {
     require(draws >= 1 && firstOffset >= 1 && firstOffset + draws - 1 <= 8,
       "draws must fit in the md5 digest windows (8 of 4 hex chars)")
     require(iters >= 1, "need at least one IRLS iteration")
@@ -955,29 +910,24 @@ object Glm {
       // would widen every per-iteration scan for nothing
       .select(col(group) +: col("__xd") +: col("__y") +:
         (0 until draws).map(i => col(s"__xq_$i")): _*)
-    // Size dispatch (round 16 — see irlsFitByGroup): a cap-bounded working
-    // set is fit on the driver from ONE bounded collect of the Spark-minted
-    // (group, __xd, __y, __xq_*) frame — the imputation stats pass plus the
-    // collect replace the persist, K moment aggregations and K−1 broadcast
-    // beta joins (7 jobs → ~3 per fit). The xq draws stay IN-PLAN, so the
-    // md5 digest arithmetic has exactly one implementation. Null groups
-    // fall through (the beta equi-join drops them after iteration 1).
-    if (localRowCap > 0) {
-      val sample = withQ.limit(localRowCap + 1).collect()
-      if (sample.length <= localRowCap && !sample.exists(_.isNullAt(0)))
-        return localMiLogitFit(sample, draws, iters, ridge,
-          withQ.schema(group), df.sparkSession)
-    }
+    // Size dispatch (see irlsFitByGroup): a working set under the cap is
+    // fit on the driver from the collected Spark-minted (group, __xd, __y,
+    // __xq_*) frame — the imputation stats pass plus the collect replace
+    // the persist, K moment aggregations and K−1 broadcast beta joins
+    // (7 jobs → ~3 per fit). The xq draws stay IN-PLAN, so the md5 digest
+    // arithmetic has exactly one implementation. Null groups fall through
+    // (the beta equi-join drops them after iteration 1).
+    val small = SizeDispatch.collectIfSmall(withQ, localRowCap, !_.isNullAt(0))
+    if (small.isDefined)
+      return localMiLogitFit(small.get, draws, iters, ridge,
+        withQ.schema(group), df.sparkSession)
     // persisted for the K IRLS moment aggregations — without it every
     // pass re-scans the raw fact; unpersisted after the pooled result
-    // is materialized. parallelFloor: see irlsFitByGroup — the m-draw
-    // moment pass is the most decimal-dense aggregation in the repo
-    // (5 quantized sums per draw per iteration). The probe is the NARROW
-    // `rows` frame, not withQ: withQ carries the imputation-stats
-    // broadcast join, and probing through it executed the stats pass
-    // twice per fit (ADVICE r15); the join does not change the streamed
-    // side's partitioning, so rows' count is withQ's count.
-    val withQp = parallelFloor(withQ, 5 * draws, rows)
+    // is materialized. The floor's probe is the NARROW `rows` frame, not
+    // withQ: withQ carries the imputation-stats broadcast join, which
+    // does not change the streamed side's partitioning, so rows' count is
+    // withQ's count.
+    val withQp = CpuFloor(withQ, rows, 5 * draws)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // driver-held model state (groups × 2m doubles), MLlib-style: one
     // distributed moment pass per iteration, per-draw 2×2 solves on the

@@ -168,6 +168,24 @@ class CurationSpec extends SparkSpec {
     assert(surv.agg(sum("n_tok")).head.getLong(0) == out("mixture")._2)
   }
 
+  test("fuzzy funnel and export resolve a qscore bound to the caller's text column") {
+    val good = "the quick brown fox jumps over a lazy dog in warm sunshine"
+    val rows = Seq((1L, good + " one", "en"), (2L, "short text", "en"),
+      (3L, good + " two", "en"), (4L, good + " solo", "fr"))
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    def run(df: org.apache.spark.sql.DataFrame, text: String) = {
+      val qscore = graft.text.TextFeatures.qualityColumns(col(text)).last
+      val weights = Map("en" -> 100, "fr" -> 100)
+      (Curation.fuzzyCurationFunnel(df, col("doc_id"), col(text), col("lang"), pairs,
+          qscore, weights).orderBy("stage").collect().toSeq,
+        Curation.fuzzyCurationExport(df, col("doc_id"), col(text), col("lang"), pairs,
+          qscore, weights).orderBy("doc_id").collect().toSeq)
+    }
+    // a text column not named `text` must give the same report and dataset
+    assert(run(rows.toDF("doc_id", "body", "lang"), "body") ===
+      run(rows.toDF("doc_id", "text", "lang"), "text"))
+  }
+
   test("funnel first-keeper join keys on the text digest, not the document") {
     // boilerplate-heavy corpus: ONE quality-passing text duplicated across
     // many doc ids — the skew shape the digest keying exists for

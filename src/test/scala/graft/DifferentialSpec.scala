@@ -30,14 +30,18 @@ class DifferentialSpec extends SparkSpec {
       // both dispatch regimes: the driver union-find path (default cap)
       // and the distributed pointer-jumping loop (cap = 0) must agree
       // with the reference AND each other
-      val got = graft.dedup.Dedup
-        .connectedComponents(edges.toDF("doc_a", "doc_b"), "doc_a", "doc_b")
-        .as[(Long, Long)].collect().toMap
-      val gotLooped = graft.dedup.Dedup
+      def components(cap: Int) = graft.dedup.Dedup
         .connectedComponents(edges.toDF("doc_a", "doc_b"), "doc_a", "doc_b",
-          localEdgeCap = 0)
-        .as[(Long, Long)].collect().toMap
-      assert(got == gotLooped, s"seed=$seed dispatch regimes disagree")
+          localEdgeCap = cap)
+        .as[(Long, Long)].collect().sortBy(_._1).toSeq
+      val gotLooped = components(0)
+      val got = components(graft.util.SizeDispatch.DefaultCap).toMap
+      assert(got == gotLooped.toMap, s"seed=$seed dispatch regimes disagree")
+      // the hand-off boundary: m directed edges are collected, so cap m-1
+      // takes the loop and caps m, m+1 the driver path — all bit-identical
+      val m = 2 * edges.size
+      for (cap <- Seq(m - 1, m, m + 1))
+        assert(components(cap) == gotLooped, s"seed=$seed cap=$cap of $m edges")
       // operator labels components by min MEMBER id; union-find roots are
       // min labels too because we always point the larger root at the
       // smaller — but path order can leave a non-min root, so normalize
@@ -329,8 +333,7 @@ class DifferentialSpec extends SparkSpec {
     // the distributed machinery: no joins, no decimal type, no shuffle).
     // Graphs sweep the corner cases the oracle distribution never hits:
     // dangling sinks, self-loops, parallel edges, disconnected stars.
-    // Scale evidence (sf3/sf10 replicas) lives in the probe harness
-    // (tmp/PageRankDiffProbeR12) recorded in SURVEY §5.
+    // Scale evidence (sf3/sf10 replicas) is recorded in SURVEY §5.
     for (seed <- 0 until 5; iters <- Seq(1, 3, 5)) {
       val rnd = new scala.util.Random(seed)
       val nMax = 60
@@ -340,14 +343,20 @@ class DifferentialSpec extends SparkSpec {
       // both dispatch regimes (round 15): the driver micro-long path
       // (default cap) and the distributed loop (cap = 0) must agree with
       // the reference AND each other
-      val got = graft.analysis.Graph
-        .pageRank(raw.toDF("s", "t"), col("s"), col("t"), iters, d)
-        .as[(Long, Double)].collect().toMap
-      val gotLooped = graft.analysis.Graph
+      def ranks(cap: Int) = graft.analysis.Graph
         .pageRank(raw.toDF("s", "t"), col("s"), col("t"), iters, d,
-          localEdgeCap = 0)
-        .as[(Long, Double)].collect().toMap
-      assert(got == gotLooped, s"seed=$seed iters=$iters d=$d dispatch regimes disagree")
+          localEdgeCap = cap)
+        .as[(Long, Double)].collect().sortBy(_._1).toSeq
+      val gotLooped = ranks(0)
+      val got = ranks(graft.util.SizeDispatch.DefaultCap).toMap
+      assert(got == gotLooped.toMap, s"seed=$seed iters=$iters d=$d dispatch regimes disagree")
+      // the hand-off boundary over the n DISTINCT edges actually collected:
+      // cap n-1 takes the loop, caps n and n+1 the driver path
+      if (iters == 3) {
+        val n = raw.distinct.size
+        for (cap <- Seq(n - 1, n, n + 1))
+          assert(ranks(cap) == gotLooped, s"seed=$seed cap=$cap of $n edges")
+      }
 
       // independent reference: micro-long accumulation on dense arrays
       val edges = raw.distinct

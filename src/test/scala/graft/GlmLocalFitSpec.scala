@@ -107,12 +107,56 @@ class GlmLocalFitSpec extends SparkSpec {
   }
 
   test("past-cap inputs take the loop (cap respected)") {
-    val df = rowsFor(2, 64).toDF("g", "x1", "x2", "y")
-    // cap below the row count: must fall through and still agree
-    val capped = Glm.logitByGroup(df, "g", Seq(col("x1"), col("x2")), col("y"),
-      Seq("b0", "b1", "b2"), localRowCap = 16)
-    val local = Glm.logitByGroup(df, "g", Seq(col("x1"), col("x2")), col("y"),
-      Seq("b0", "b1", "b2"))
-    exactSame(capped, local)
+    // 9 of the 64 rows are incomplete (null x1), so the dispatch collects
+    // n = 55 complete rows: cap n-1 takes the loop, caps n and n+1 the
+    // driver fit, and all three are bit-identical to the forced loop
+    val df = rowsFor(2, 64).map { case (g, x1, x2, y) =>
+      (g, if (x2 == 2.0) null else java.lang.Double.valueOf(x1), x2, y)
+    }.toDF("g", "x1", "x2", "y")
+    val n = df.filter(col("x1").isNotNull).count().toInt
+    assert(n === 55)
+    def fit(cap: Int) = Glm.logitByGroup(df, "g", Seq(col("x1"), col("x2")), col("y"),
+      Seq("b0", "b1", "b2"), localRowCap = cap)
+    val looped = fit(0)
+    for (cap <- Seq(n - 1, n, n + 1)) exactSame(fit(cap), looped)
+    // the boundary itself: at most `cap` rows go local
+    val working = df.filter(col("x1").isNotNull)
+    assert(graft.util.SizeDispatch.collectIfSmall(working, n - 1).isEmpty)
+    assert(graft.util.SizeDispatch.collectIfSmall(working, n).exists(_.length == n))
+    assert(graft.util.SizeDispatch.collectIfSmall(working, n + 1).exists(_.length == n))
+    assert(graft.util.SizeDispatch.collectIfSmall(working, 0).isEmpty)
+  }
+
+  test("mi-logit at the cap boundary == forced distributed loop") {
+    // rows with a null y are dropped before the dispatch collect, so the
+    // boundary sits at the n rows with an observed y
+    val df = (0 until 90).map { i =>
+      val x = if (i % 4 == 0) null else java.lang.Double.valueOf(hashed(13, i))
+      val y = if (i % 9 == 0) null else java.lang.Double.valueOf(if ((i * 7) % 5 < 2) 1.0 else 0.0)
+      (s"g${i % 2}", i.toLong, x, y)
+    }.toDF("g", "id", "x", "y")
+    val n = df.filter(col("y").isNotNull).count().toInt
+    assert(n === 80)
+    def fit(cap: Int) = Glm.miLogitPooledByGroup(df, "g", col("id"), col("x"), col("y"),
+      draws = 2, localRowCap = cap)
+    val looped = fit(0)
+    for (cap <- Seq(n - 1, n, n + 1)) exactSame(fit(cap), looped)
+  }
+
+  test("NaN predictors: local fit == forced distributed loop") {
+    // NaN is not NULL, so NaN rows stay in the complete-case working set;
+    // their μ and Huber weight go through the 9dp rounding, whose SQL
+    // FLOOR→BIGINT maps NaN to 0 — the driver twin must do the same
+    val df = rowsFor(5, 120).map { case (g, x1, x2, y) =>
+      (g, if (x2 == 4.0) Double.NaN else x1, x2, y)
+    }.toDF("g", "x1", "x2", "y")
+    val xs = Seq(col("x1"), col("x2"))
+    exactSame(
+      Glm.logitByGroup(df, "g", xs, col("y"), Seq("b0", "b1", "b2")),
+      Glm.logitByGroup(df, "g", xs, col("y"), Seq("b0", "b1", "b2"), localRowCap = 0))
+    exactSame(
+      Glm.huberByGroup(df, "g", xs, col("y"), Seq("b0", "b1", "b2"), delta = 1.5),
+      Glm.huberByGroup(df, "g", xs, col("y"), Seq("b0", "b1", "b2"), delta = 1.5,
+        localRowCap = 0))
   }
 }

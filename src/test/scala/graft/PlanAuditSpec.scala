@@ -790,4 +790,17 @@ class PlanAuditSpec extends SparkSpec {
     val noPush = ev.withColumn("ts2", col("ts")).filter(col("ts2") >= lo).count()
     assert(viaRule == noPush)
   }
+
+  test("CpuFloor floors a narrow one-task scan and returns a non-narrow probe as is") {
+    val docs = GraftSession.table(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text")).filter(col("doc_id") > 0)
+    assert(docs.rdd.getNumPartitions == 1)
+    assert(graft.util.CpuFloor(docs).rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+    // an aggregation under the probe: probing it would execute its
+    // exchange, so the frame comes back untouched instead
+    val agg = docs.groupBy(col("doc_id")).count()
+    assert(graft.util.CpuFloor(agg) eq agg)
+    assert(graft.util.CpuFloor(docs, agg, decimalSums = 20) eq docs)
+  }
 }
